@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,10 +8,7 @@ object Verify {
     // optional third arg: comma-separated query-name subset (local
     // iteration only — the driver always runs the full surface)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(Bench.cores)
     new java.io.File(outDir).mkdirs()
     // a query that throws here simply has no parquet dir, so the driver's
     // correctness JSON silently OMITS it (round 7: 16 broken queries were
